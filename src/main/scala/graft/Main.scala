@@ -14,8 +14,10 @@ import org.apache.spark.sql.SparkSession
 object Main {
 
   /** Register every source and plan each source's SQL (lazily — nothing
-    * executes until the caller consumes the frames). Separated from
-    * `main` so the pipeline is e2e-testable against a live session. */
+    * executes until the caller consumes the frames). Registration caches
+    * nothing, so repeated runs on one session leave no storage behind.
+    * Separated from `main` so the pipeline is e2e-testable against a live
+    * session. */
   def run(spark: SparkSession, cfg: graft.config.Config)
       : Seq[(String, org.apache.spark.sql.DataFrame)] =
     cfg.sources.flatMap { src =>

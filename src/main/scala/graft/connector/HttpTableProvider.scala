@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,12 +23,18 @@ import scala.jdk.CollectionConverters._
   * This is the idiomatic end-state for the reference's HTTP scan
   * (/root/reference/src/datasources.rs:318-391): the provider fetches the
   * snapshot eagerly on the driver (same snapshot semantics as
-  * `HttpTables` / reference dataframe.rs:14-21), infers an all-rows
-  * superset schema, and serves scans whose DECODE IS PROJECTION-AWARE —
+  * reference dataframe.rs:14-21), infers an all-rows superset schema,
+  * and serves scans whose DECODE IS PROJECTION-AWARE —
   * `SupportsPushDownRequiredColumns` hands the scan the pruned schema and
   * the partition readers parse ONLY those fields out of each JSON row
   * (the reference's `project_values` decodes only projected columns —
   * execution.rs:60-76). `SELECT a FROM t` never materializes column b.
+  * Projection is the only pushdown; every other operator runs in
+  * Catalyst above the scan (see [[HttpScanBuilder]]).
+  *
+  * Schema contract: snapshot mode infers from every row of every page,
+  * so a field that first appears on a later page is in the schema and
+  * reads as null on the rows that lack it.
   *
   * Options: `url` (required), `method` (GET|POST, default GET),
   * `paginate` (=true enables the pagination loop), `start_page`,
@@ -43,16 +48,16 @@ import scala.jdk.CollectionConverters._
   * contiguous page-range [[InputPartition]]s that each EXECUTOR fetches
   * and decodes itself. At 1000-executor scale the driver never
   * materializes the snapshot — ingestion bandwidth is the cluster's,
-  * not one machine's. Pushed filters ride along and prune rows at
-  * executor decode time (same advisory-safe residual contract as the
-  * driver path). Trade-offs vs the default snapshot path, documented:
-  * schema comes from page 1 only (the reference's own first-record
-  * semantics, datasources.rs:195-196), and the empty-page termination
-  * rule becomes per-range (a bounded `end_page` is the contract here —
-  * the config-driven intent of reference datasources.rs:286-316).
+  * not one machine's. Trade-offs vs the default snapshot path,
+  * documented: schema comes from page 1 only (the reference's own
+  * first-record semantics, datasources.rs:195-196), so a field that
+  * first appears on a later page is not read, and the empty-page
+  * termination rule becomes per-range (a bounded `end_page` is the
+  * contract here — the config-driven intent of reference
+  * datasources.rs:286-316).
   *
-  * `HttpTables.register` remains the simple path (decode-all + cache);
-  * this connector is the scan-integrated path.
+  * `HttpTables.register` and `graft.Main` read through this connector
+  * in snapshot mode.
   */
 final class HttpTableProvider extends TableProvider with DataSourceRegister {
 
@@ -92,9 +97,10 @@ final class HttpTableProvider extends TableProvider with DataSourceRegister {
     val spark = SparkSession.active
     import spark.implicits._
     // all-rows superset inference (documented divergence from the
-    // reference's first-record-only inference, SURVEY.md §7.1) — reuses
-    // Spark's JSON inference so the connector and HttpTables agree.
-    spark.read.json(spark.createDataset(rows)).schema
+    // reference's first-record-only inference, SURVEY.md §7.1), run as one
+    // job over min(rows, defaultParallelism) slices
+    val slices = math.max(1, math.min(rows.size, spark.sparkContext.defaultParallelism))
+    spark.read.json(spark.createDataset(spark.sparkContext.parallelize(rows, slices))).schema
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -115,8 +121,20 @@ object HttpTableProvider {
   private[connector] def executorFetch(o: CaseInsensitiveStringMap): Boolean =
     Option(o.get("fetch")).exists(_.equalsIgnoreCase("executor"))
 
+  /** Map the config model to reader options: the inverse of [[toSource]]
+    * for every field but `sql`, which is not a reader option. */
+  private[graft] def options(src: Source): Map[String, String] =
+    Map("url" -> src.url, "name" -> src.name, "method" -> src.method) ++
+      src.pagination.fold(Map.empty[String, String])(p => Map(
+        "paginate" -> "true",
+        "start_page" -> p.startPage.toString,
+        "end_page" -> p.endPage.toString,
+        "page_size" -> p.pageSize.toString,
+        "page_param" -> p.pageParam,
+        "page_size_param" -> p.pageSizeParam))
+
   /** Map reader options to the config model (same names as YAML keys). */
-  private[connector] def toSource(o: CaseInsensitiveStringMap): Source = {
+  private[graft] def toSource(o: CaseInsensitiveStringMap): Source = {
     val url = Option(o.get("url")).getOrElse(
       throw ConfigError("http source requires option: url"))
     val d = Pagination()
@@ -150,302 +168,24 @@ final class HttpTable(tableName: String, tableSchema: StructType,
     java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new HttpScanBuilder(tableSchema, rows, src)
+    new HttpScanBuilder(tableSchema,
+      new HttpScan(rows, _, tableSchema.length, src))
 }
 
-/** Scan builder accepting Catalyst's column-pruning, filter, and limit
-  * pushdown. Filters and limit prune the driver-held snapshot BEFORE
-  * rows are shipped to executors and decoded — a strict improvement on
-  * the reference, which pushes nothing (datasources.rs:385-388).
-  *
-  * Safety: every filter is also returned as a residual (Spark re-applies
-  * it post-scan), so the driver-side JSON predicate can afford to be
-  * best-effort — an un-evaluatable node simply keeps the row. Limit is
-  * reported as not-fully-pushed for the same reason. */
-final class HttpScanBuilder(full: StructType, rows: Array[String],
-                            src: Source)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit
-    with SupportsPushDownTopN
-    with SupportsPushDownAggregates {
-  import org.apache.spark.sql.connector.expressions.aggregate.{
-    Aggregation, Count, CountStar, Max, Min}
-  import org.apache.spark.sql.connector.expressions.{
-    Expression => V2Expression, NamedReference, SortDirection, SortOrder}
-
+/** Column pruning is the only pushdown, as in the reference
+  * (execution.rs:60-76; nothing else, datasources.rs:385-388). Filters,
+  * limits, sorts and aggregates stay above the scan, where Catalyst runs
+  * them as parallel codegen operators over the decoded rows instead of
+  * re-parsing the snapshot on the driver while the query is planned.
+  * `scan` builds the mode's scan over the pruned schema. */
+final class HttpScanBuilder(full: StructType, scan: StructType => Scan)
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = full
-  private var pushed: Array[sources.Filter] = Array.empty
-  private var limit: Int = -1
-  private var topN: Int = -1
-  private var topKey: Option[(String, Boolean)] = None // (column, ascending)
-  private var aggResult: Option[(String, StructType)] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    pushed = filters.filter(JsonPredicate.supported)
-    filters // all residual: Spark re-checks, so pruning is advisory-safe
-  }
-  override def pushedFilters(): Array[sources.Filter] = pushed
-
-  override def pushLimit(n: Int): Boolean = { limit = n; false }
-
-  // --- top-N pushdown (PARTIAL): ORDER BY col LIMIT n ships only the n
-  // best snapshot rows to executors instead of the whole table. Spark
-  // re-sorts and re-limits above the scan (isPartiallyPushed), so the
-  // driver-side sort only has to guarantee a SUPERSET-of-top-n, which
-  // it does by declining anything whose ordering could diverge from
-  // Spark's: multi-key sorts, nested/array keys, and — because a
-  // missing or null key's rank depends on the null ordering — any
-  // snapshot where the key is absent, null, or not value-convertible
-  // on even one row. Comparators mirror Spark exactly where accepted
-  // (Long/Boolean natural, java.lang.Double.compare for NaN/-0.0,
-  // UTF8String binary order for strings).
-  override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
-    if (orders.length != 1 || n <= 0) return false
-    val o = orders.head
-    soleField(o.expression()) match {
-      case Some(col) =>
-        val typeOk = full(col).dataType match {
-          case LongType | DoubleType | StringType | BooleanType => true
-          case _ => false
-        }
-        if (!typeOk) return false
-        val mapper = new ObjectMapper()
-        val keyTotal = rows.forall { line =>
-          val node = try mapper.readTree(line) catch { case _: Exception => null }
-          node != null && node.isObject && {
-            val v = node.get(col)
-            v != null && !v.isNull && (full(col).dataType match {
-              case LongType => v.canConvertToLong
-              case DoubleType => v.isNumber
-              case BooleanType => v.isBoolean
-              case _ => true
-            })
-          }
-        }
-        if (!keyTotal) return false
-        topKey = Some((col, o.direction() == SortDirection.ASCENDING))
-        topN = n
-        true
-      case None => false
-    }
-  }
-  override def isPartiallyPushed(): Boolean = true
-
-  /** The n best rows under the accepted single-key ordering (only
-    * reached when [[pushTopN]] proved the key total and convertible). */
-  private def applyTopN(lines: Array[String], mapper: ObjectMapper): Array[String] =
-    topKey match {
-      case Some((col, asc)) if topN >= 0 && topN < lines.length =>
-        def node(line: String): JsonNode = mapper.readTree(line).get(col)
-        val sorted = full(col).dataType match {
-          case LongType =>
-            lines.map(l => (node(l).asLong, l)).sortBy(_._1).map(_._2)
-          case DoubleType =>
-            lines.map(l => (node(l).asDouble, l))
-              .sortWith((a, b) => java.lang.Double.compare(a._1, b._1) < 0)
-              .map(_._2)
-          case BooleanType =>
-            lines.map(l => (node(l).asBoolean, l)).sortBy(_._1).map(_._2)
-          case _ =>
-            lines.map { l =>
-              val v = node(l)
-              (UTF8String.fromString(if (v.isTextual) v.asText else v.toString), l)
-            }.sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
-        }
-        (if (asc) sorted else sorted.reverse).take(topN)
-      case _ => lines
-    }
-
-  // --- aggregate pushdown (COMPLETE): global COUNT(*)/COUNT(col)/MIN/MAX
-  // are answered from the driver-held snapshot without shipping a single
-  // data row to executors — "SELECT count(*) FROM api_table" becomes a
-  // 1-row scan. Complete (not partial) pushdown is only claimed when
-  // every aggregate is computable exactly here; grouped or unsupported
-  // aggregations fall back to the normal scan untouched. Because this
-  // builder reports every filter as residual, Spark only routes an
-  // aggregate here when no Filter sits between it and the scan — the
-  // unfiltered-rollup fast path, exact by construction.
-
-  private def soleField(e: V2Expression): Option[String] = e match {
-    case nr: NamedReference if nr.fieldNames.length == 1 =>
-      val n = nr.fieldNames.head
-      if (full.fieldNames.contains(n)) Some(n) else None
-    case _ => None
-  }
-
-  /** Supported plan: per aggregate, (kind, column). Min/max only on the
-    * scalar types whose JSON round-trip is value-exact. */
-  private def aggPlanOf(agg: Aggregation): Option[Seq[(String, String)]] = {
-    if (agg.groupByExpressions.nonEmpty) return None
-    def minMaxOk(n: String): Boolean = full(n).dataType match {
-      case LongType | DoubleType | StringType | BooleanType => true
-      case _ => false
-    }
-    val specs: Seq[Option[(String, String)]] = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(("count_star", ""))
-      case c: Count if !c.isDistinct => soleField(c.column).map(("count", _))
-      case m: Min => soleField(m.column).filter(minMaxOk).map(("min", _))
-      case m: Max => soleField(m.column).filter(minMaxOk).map(("max", _))
-      case _ => None
-    }
-    if (specs.nonEmpty && specs.forall(_.isDefined)) Some(specs.map(_.get))
-    else None
-  }
-
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    aggPlanOf(agg).isDefined
-
-  override def pushAggregation(agg: Aggregation): Boolean = aggPlanOf(agg) match {
-    case None => false
-    case Some(specs) =>
-      val mapper = new ObjectMapper()
-      val nodes = prunedLines(mapper).map { line =>
-        try mapper.readTree(line) catch { case _: Exception => null }
-      }.filter(n => n != null && n.isObject)
-      def valuesOf(col: String): Array[JsonNode] = nodes
-        .map(_.get(col))
-        .filter(v => v != null && !v.isNull)
-        .filter(v => full(col).dataType match { // reader-convert validity
-          case LongType => v.canConvertToLong
-          case DoubleType => v.isNumber
-          case BooleanType => v.isBoolean
-          case _ => true // strings coerce via text/toString, never null
-        })
-      val out = mapper.createObjectNode()
-      val fields = specs.zipWithIndex.map { case ((kind, col), i) =>
-        val name = s"agg_$i"
-        kind match {
-          case "count_star" =>
-            out.put(name, nodes.length.toLong)
-            StructField(name, LongType, nullable = false)
-          case "count" =>
-            out.put(name, valuesOf(col).length.toLong)
-            StructField(name, LongType, nullable = false)
-          case mm =>
-            val dt = full(col).dataType
-            val vs = valuesOf(col)
-            val sign = if (mm == "min") -1 else 1
-            if (vs.isEmpty) out.putNull(name)
-            else dt match {
-              case LongType =>
-                out.put(name, vs.map(_.asLong)
-                  .reduce((a, b) => if (java.lang.Long.compare(a, b) * sign >= 0) a else b))
-              case DoubleType =>
-                out.put(name, vs.map(_.asDouble)
-                  .reduce((a, b) => if (java.lang.Double.compare(a, b) * sign >= 0) a else b))
-              case BooleanType =>
-                out.put(name, vs.map(_.asBoolean)
-                  .reduce((a, b) => if (java.lang.Boolean.compare(a, b) * sign >= 0) a else b))
-              case _ => // StringType: UTF8String binary order = Spark's
-                out.put(name, vs
-                  .map(v => if (v.isTextual) v.asText else v.toString)
-                  .map(UTF8String.fromString)
-                  .reduce((a, b) => if (a.compareTo(b) * sign >= 0) a else b)
-                  .toString)
-            }
-            StructField(name, dt, nullable = true)
-        }
-      }
-      aggResult = Some((mapper.writeValueAsString(out), StructType(fields)))
-      true
-  }
-
-  private def prunedLines(mapper: ObjectMapper): Array[String] = {
-    val afterFilters =
-      if (pushed.isEmpty) rows
-      else rows.filter { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        pushed.forall(f => JsonPredicate.matches(node, f))
-      }
-    val afterTopN = applyTopN(afterFilters, mapper)
-    if (limit >= 0 && limit < afterTopN.length) afterTopN.take(limit)
-    else afterTopN
-  }
-
-  override def build(): Scan = aggResult match {
-    case Some((line, schema)) => new HttpScan(Array(line), schema, full.length, src)
-    case None =>
-      new HttpScan(prunedLines(new ObjectMapper()), required, full.length, src)
-  }
-}
-
-/** Best-effort evaluation of Catalyst source filters against a JsonNode.
-  * `matches` must NEVER wrongly return false for a row the real
-  * predicate accepts (filters are re-applied post-scan, so returning
-  * true on uncertainty is always safe). */
-private[connector] object JsonPredicate {
-  import sources._
-
-  def supported(f: Filter): Boolean = f match {
-    case EqualTo(_, _) | GreaterThan(_, _) | GreaterThanOrEqual(_, _) |
-         LessThan(_, _) | LessThanOrEqual(_, _) | IsNull(_) | IsNotNull(_) |
-         In(_, _) | StringStartsWith(_, _) | StringEndsWith(_, _) |
-         StringContains(_, _) => true
-    case And(l, r) => supported(l) && supported(r)
-    case Or(l, r) => supported(l) && supported(r)
-    case _ => false // Not/EqualNullSafe/unknown: leave to post-scan
-  }
-
-  def matches(root: JsonNode, f: Filter): Boolean = {
-    if (root == null) return true // unparseable here → let the scan decide
-    f match {
-      case And(l, r) => matches(root, l) && matches(root, r)
-      case Or(l, r) => matches(root, l) || matches(root, r)
-      case IsNull(a) => field(root, a).forall(_.isNull)
-      case IsNotNull(a) => field(root, a).exists(!_.isNull)
-      case EqualTo(a, v) => cmp(root, a, v).forall(_ == 0)
-      case GreaterThan(a, v) => cmp(root, a, v).forall(_ > 0)
-      case GreaterThanOrEqual(a, v) => cmp(root, a, v).forall(_ >= 0)
-      case LessThan(a, v) => cmp(root, a, v).forall(_ < 0)
-      case LessThanOrEqual(a, v) => cmp(root, a, v).forall(_ <= 0)
-      case In(a, vs) => field(root, a) match {
-        // per-value: incomparable (None) counts as a possible match —
-        // keep-on-uncertainty, the post-scan Filter decides
-        case Some(n) if !n.isNull => vs.exists(v => compare(n, v).forall(_ == 0))
-        case _ => true
-      }
-      case StringStartsWith(a, p) => str(root, a).forall(_.startsWith(p))
-      case StringEndsWith(a, p) => str(root, a).forall(_.endsWith(p))
-      case StringContains(a, p) => str(root, a).forall(_.contains(p))
-      case _ => true
-    }
-  }
-
-  /** Resolve a (possibly dotted) attribute; None = can't resolve here.
-    * A field whose NAME contains a dot arrives backtick-quoted — try the
-    * whole (unquoted) name before splitting on dots. */
-  private def field(root: JsonNode, attr: String): Option[JsonNode] = {
-    if (root == null || !root.isObject) return None
-    val unquoted = attr.replace("`", "")
-    val whole = root.get(unquoted)
-    if (whole != null) return Some(whole)
-    var n: JsonNode = root
-    for (part <- unquoted.split('.')) {
-      if (n == null || !n.isObject) return None
-      n = n.get(part)
-    }
-    Option(n)
-  }
-
-  private def str(root: JsonNode, attr: String): Option[String] =
-    field(root, attr).collect { case n if n.isTextual => n.asText }
-
-  /** Some(sign) when comparable; None = keep the row. */
-  private def cmp(root: JsonNode, attr: String, v: Any): Option[Int] =
-    field(root, attr).flatMap(n => compare(n, v))
-
-  private def compare(n: JsonNode, v: Any): Option[Int] = (n, v) match {
-    case (x, _) if x.isNull => None
-    case (x, s: String) if x.isTextual => Some(x.asText.compareTo(s))
-    case (x, b: java.lang.Boolean) if x.isBoolean =>
-      Some(java.lang.Boolean.compare(x.asBoolean, b))
-    case (x, num: Number) if x.isNumber =>
-      Some(java.lang.Double.compare(x.asDouble, num.doubleValue))
-    case _ => None // type mismatch: post-scan decides
-  }
+  override def build(): Scan = scan(required)
 }
 
 /** Scan over the driver-held snapshot: rows are sliced across
@@ -484,7 +224,6 @@ final class HttpScan(rows: Array[String], required: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    if (rows.isEmpty) return Array.empty // pushed filters can prune all rows
     val slices = math.max(1, math.min(rows.length,
       SparkSession.active.sparkContext.defaultParallelism))
     val per = (rows.length + slices - 1) / slices
@@ -643,38 +382,13 @@ final class HttpDistributedTable(tableName: String, tableSchema: StructType,
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new HttpDistributedScanBuilder(tableSchema, src)
-}
-
-/** Column pruning and filter pushdown for the distributed path. There is
-  * no snapshot to prune on the driver — pushed filters are SHIPPED with
-  * each page-range partition and applied at executor decode time, before
-  * any InternalRow materializes (all filters stay residual, so the
-  * executor-side check keeps the same keep-on-uncertainty contract as
-  * [[JsonPredicate]] everywhere else). Limit is not pushed: a global
-  * limit over unordered distributed pages is Spark's to enforce. */
-final class HttpDistributedScanBuilder(full: StructType, src: Source)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = full
-  private var pushed: Array[sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    pushed = filters.filter(JsonPredicate.supported)
-    filters
-  }
-  override def pushedFilters(): Array[sources.Filter] = pushed
-  override def build(): Scan = new HttpDistributedScan(required, src, pushed)
+    new HttpScanBuilder(tableSchema, new HttpDistributedScan(_, src))
 }
 
 /** Plans `start_page..end_page` as ≤ defaultParallelism contiguous
-  * page-range partitions. Each partition is (source config, page range,
-  * pushed filters) — pure metadata, a few hundred bytes, regardless of
-  * data volume. */
-final class HttpDistributedScan(required: StructType, src: Source,
-                                filters: Array[sources.Filter])
+  * page-range partitions. Each partition is (source config, page range)
+  * — pure metadata, a few hundred bytes, regardless of data volume. */
+final class HttpDistributedScan(required: StructType, src: Source)
     extends Scan with Batch {
   private val p = src.pagination.getOrElse(Pagination())
 
@@ -695,37 +409,32 @@ final class HttpDistributedScan(required: StructType, src: Source,
       .toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new HttpDistributedReaderFactory(required, filters)
+    new HttpDistributedReaderFactory(required)
 }
 
 final case class HttpPageRangePartition(src: Source, fromPage: Int,
                                         toPage: Int) extends InputPartition
 
-final class HttpDistributedReaderFactory(required: StructType,
-                                         filters: Array[sources.Filter])
+final class HttpDistributedReaderFactory(required: StructType)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val pr = partition.asInstanceOf[HttpPageRangePartition]
-    new HttpPageRangeReader(pr, required, filters)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new HttpPageRangeReader(partition.asInstanceOf[HttpPageRangePartition], required)
 }
 
-/** Executor-side reader: fetches each page in its range, filters the
-  * parsed JSON against the pushed predicates (keep-on-uncertainty), and
-  * decodes only the pruned columns. An empty/null page ends THIS range —
-  * within a contiguous range that matches the sequential loop's
-  * termination; ranges past a feed's true end simply fetch their first
-  * page, see it empty, and finish (bounded by `end_page` either way). */
+/** Executor-side reader: fetches each page in its range and decodes only
+  * the pruned columns. An empty/null page ends THIS range — within a
+  * contiguous range that matches the sequential loop's termination;
+  * ranges past a feed's true end simply fetch their first page, see it
+  * empty, and finish (bounded by `end_page` either way). */
 final class HttpPageRangeReader(part: HttpPageRangePartition,
-                                required: StructType,
-                                filters: Array[sources.Filter])
+                                required: StructType)
     extends PartitionReader[InternalRow] {
   private val fetcher = new HttpFetcher()
   private val mapper = new ObjectMapper()
   private val p = part.src.pagination.getOrElse(Pagination())
   private var page = part.fromPage
   private var exhausted = false
-  private var buf: Iterator[JsonNode] = Iterator.empty
+  private var buf: Iterator[String] = Iterator.empty
   private var current: InternalRow = _
 
   private def advancePage(): Unit =
@@ -736,8 +445,6 @@ final class HttpPageRangeReader(part: HttpPageRangePartition,
         page += 1
         if (rows.isEmpty) exhausted = true // empty page ends the range
         else buf = rows.iterator
-          .map(line => try mapper.readTree(line) catch { case _: Exception => null })
-          .filter(n => filters.forall(f => JsonPredicate.matches(n, f)))
       }
     }
 
@@ -745,7 +452,7 @@ final class HttpPageRangeReader(part: HttpPageRangePartition,
     advancePage()
     if (!buf.hasNext) false
     else {
-      current = JsonDecode.toRow(buf.next(), required)
+      current = JsonDecode.toRow(mapper.readTree(buf.next()), required)
       true
     }
   }

@@ -7,6 +7,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 import scala.jdk.CollectionConverters._
+import scala.jdk.OptionConverters._
 
 /** HTTP request executor + pagination (reference: `data_extraction` at
   * /root/reference/src/datasources.rs:212-268 and the page loop at
@@ -30,8 +31,8 @@ import scala.jdk.CollectionConverters._
   *     (datasources.rs:286-316) instead of a hard-coded `?page=`.
   *
   * This runs on the DRIVER at registration time (same as the reference's
-  * eager fetch, dataframe.rs:14-21): the snapshot is then parallelized
-  * into a DataFrame, so a 1000-executor cluster still only fetches once.
+  * eager fetch, dataframe.rs:14-21): the snapshot is then sliced into
+  * scan partitions, so a 1000-executor cluster still only fetches once.
   */
 class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
                   maxRetries: Int = 2,
@@ -47,6 +48,8 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
     * `maxRetries` times with exponential backoff (production behavior
     * the reference lacks: its `data_extraction` surfaces the first error,
     * datasources.rs:237-248, so one flaky page kills a whole ingestion).
+    * A 429 whose `Retry-After` gives delay-seconds waits that long instead,
+    * capped at `timeout`; the HTTP-date form falls back to the backoff.
     * 4xx other than 429 fails immediately: the request itself is wrong
     * and retrying cannot fix it. */
   def fetchJson(url: String, method: String = "GET", body: String = ""): JsonNode = {
@@ -60,11 +63,14 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
     var attempt = 0
     var resp: HttpResponse[String] = null
     var lastErr: HttpError = null
+    var delay = 0L
     while (resp == null && attempt <= maxRetries) {
-      if (attempt > 0) Thread.sleep(backoffMillis << (attempt - 1))
+      if (attempt > 0) Thread.sleep(delay)
       attempt += 1
+      delay = backoffMillis << (attempt - 1)
       try {
         val r = client.send(req, HttpResponse.BodyHandlers.ofString())
+        if (r.statusCode() == 429) retryAfterMillis(r).foreach(delay = _)
         if (r.statusCode() >= 500 || r.statusCode() == 429)
           lastErr = HttpError(s"HTTP ${r.statusCode()} from $url", r.statusCode())
         else resp = r
@@ -82,6 +88,14 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
       try mapper.readTree(text)
       catch { case e: Exception => throw HttpError(s"invalid JSON from $url", cause = e) }
   }
+
+  /** `Retry-After: <delay-seconds>` in millis, capped at `timeout`. */
+  private def retryAfterMillis(r: HttpResponse[String]): Option[Long] =
+    r.headers().firstValue("Retry-After").toScala
+      .flatMap(_.trim.toLongOption).filter(_ >= 0)
+      .map(secs =>
+        if (Duration.ofSeconds(secs).compareTo(timeout) < 0) secs * 1000L
+        else timeout.toMillis)
 
   /** Flatten a response body into JSON-line rows. */
   def toRows(node: JsonNode): Seq[String] =

@@ -1,47 +1,30 @@
 package graft.source
 
-import graft.GraftError.EmptyResultError
 import graft.config.Source
-import graft.http.HttpFetcher
+import graft.connector.HttpTableProvider
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** HTTP table registration — the engine's library entry point (reference:
-  * `dataframe::url` at /root/reference/src/dataframe.rs:7-24, which fetches
-  * eagerly and `ctx.register_table`s the snapshot).
+  * `dataframe::url` at dataframe.rs:7-24, which fetches eagerly and
+  * `ctx.register_table`s the snapshot).
   *
-  * Spark-first shape: fetch once on the driver → `Dataset[String]` of JSON
-  * lines → `spark.read.json` (schema inference + decode) → `.cache()` →
-  * temp view. Catalyst then gives every downstream query projection
-  * pruning, predicate pushdown, and whole-stage codegen over the decoded
-  * snapshot — strictly better than the reference's per-query NDJSON
-  * re-decode (/root/reference/src/execution.rs:173-202).
-  *
-  * Schema divergence (documented, SURVEY.md §7): inference scans ALL rows
-  * (a superset of the reference's first-record-only inference at
-  * datasources.rs:195,318-343), so fields missing from row 1 still appear.
+  * A thin wrapper over the `format("http")` connector in snapshot mode:
+  * the driver fetches once and infers the schema from all rows; each query
+  * then decodes only its projected columns in parallel scan tasks, and
+  * Catalyst runs every other operator above the scan. Nothing is cached,
+  * so a registration leaves the session's CacheManager as it found it.
   */
 object HttpTables {
 
-  /** Fetch, decode, cache, and register `source.name` as a temp view.
-    * Returns the registered DataFrame. */
-  def register(spark: SparkSession, source: Source,
-               fetcher: HttpFetcher = new HttpFetcher()): DataFrame = {
-    val df = load(spark, source, fetcher)
+  /** Fetch and register `source.name` as a temp view. Returns the
+    * registered DataFrame. */
+  def register(spark: SparkSession, source: Source): DataFrame = {
+    val df = load(spark, source)
     df.createOrReplaceTempView(source.name)
     df
   }
 
-  /** Load without registering. The snapshot is parallelized across the
-    * cluster default parallelism so downstream scans aren't single-slice
-    * (the reference pins `UnknownPartitioning(1)` — execution.rs:95). */
-  def load(spark: SparkSession, source: Source,
-           fetcher: HttpFetcher = new HttpFetcher()): DataFrame = {
-    import spark.implicits._
-    val rows = fetcher.fetchRows(source)
-    if (rows.isEmpty) throw EmptyResultError(source.url)
-    val slices = math.min(rows.size, spark.sparkContext.defaultParallelism)
-    val lines = spark.createDataset(
-      spark.sparkContext.parallelize(rows, math.max(1, slices)))
-    spark.read.json(lines).cache()
-  }
+  /** Load without registering. */
+  def load(spark: SparkSession, source: Source): DataFrame =
+    spark.read.format("http").options(HttpTableProvider.options(source)).load()
 }

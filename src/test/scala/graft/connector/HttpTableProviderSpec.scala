@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
 /** e2e specs for the DSv2 `format("http")` connector: registration by
   * short name, schema inference, values, column-pruned decode (the
   * BatchScan's readSchema must shrink to the projection), pagination
-  * options, and nested/array decode. */
+  * options, and nested/array decode. Projection is the only pushdown:
+  * filter, limit, top-N and aggregate specs check their answers and that
+  * the scan still holds the whole snapshot. */
 class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
 
   private val users =
@@ -24,9 +26,21 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
       .stripMargin.replaceAll("\n\\s*", "")
 
   private def scanOf(df: org.apache.spark.sql.DataFrame): HttpScan =
-    df.queryExecution.executedPlan.collectFirst {
+    df.queryExecution.sparkPlan.collectFirst { // pre-AQE: sees below exchanges
       case b: BatchScanExec => b.scan.asInstanceOf[HttpScan]
     }.getOrElse(fail("no BatchScanExec in plan"))
+
+  /** The scan behind `df`, after asserting it holds all three fixture
+    * rows and decodes exactly `cols`. */
+  private def wholeSnapshot(df: org.apache.spark.sql.DataFrame, cols: Set[String]): HttpScan = {
+    val scan = scanOf(df)
+    assert(scan.planInputPartitions()
+      .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 3,
+      s"scan must hold the whole snapshot: ${scan.description()}")
+    assert(scan.readSchema().fieldNames.toSet == cols,
+      s"scan decodes ${scan.readSchema().catalogString}")
+    scan
+  }
 
   test("format(\"http\") resolves by short name, infers schema, reads values") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
@@ -54,19 +68,15 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("aggregate pushdown: global count/min/max answered by a 1-row scan, no HashAggregate") {
+  test("global count/min/max run in Spark over a pruned scan") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
         .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"),
           org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.col("score")).as("ns"),
           org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("score")).as("mn"),
           org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("name")).as("mx"))
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("HashAggregate"),
-        s"aggregate was not completely pushed:\n$plan")
-      val scan = scanOf(df)
-      assert(scan.description().contains("rows=1"),
-        s"pushed-aggregate scan should hold exactly one row: ${scan.description()}")
+      assert(df.queryExecution.executedPlan.toString.contains("Aggregate("))
+      wholeSnapshot(df, Set("score", "name"))
       val r = df.collect().head
       assert(r.getAs[Long]("n") == 3L)
       assert(r.getAs[Long]("ns") == 3L)
@@ -88,8 +98,9 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
       val d = load().agg(countDistinct(col("active")).as("n"))
       assert(d.queryExecution.executedPlan.toString.contains("HashAggregate"))
       assert(d.collect().head.getLong(0) == 2L)
-      // a residual filter between aggregate and scan blocks pushdown; result exact
+      // filtered: Spark filters, then aggregates; result exact
       val f = load().filter(col("score") > 7.5).agg(count(lit(1)).as("n"))
+      wholeSnapshot(f, Set("score"))
       assert(f.collect().head.getLong(0) == 2L)
     }
   }
@@ -121,81 +132,69 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("filter pushdown prunes snapshot rows before decode; results stay correct") {
+  test("filters run in Spark above a pruned full-snapshot scan") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
-        .filter("active = true AND score > 8.0")
-      val scan = scanOf(df)
-      // only ann (score 9.5, active) survives the driver-side prune
-      assert(scan.planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 1)
-      val rows = df.select("name").collect().map(_.getString(0)).toSeq
-      assert(rows == Seq("ann"))
+        .filter("active = true AND score > 8.0").select("name")
+      wholeSnapshot(df, Set("active", "score", "name"))
+      // only ann (score 9.5, active) survives Spark's Filter
+      assert(df.collect().map(_.getString(0)).toSeq == Seq("ann"))
     }
   }
 
   test("string and IN filters prune; unsupported filters fall back safely") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       def load() = spark.read.format("http").option("url", srv.url("/users")).load()
-      val starts = load().filter("name LIKE 'b%'")
-      assert(scanOf(starts).planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 1)
-      assert(starts.select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
+      val starts = load().filter("name LIKE 'b%'").select("id")
+      wholeSnapshot(starts, Set("name", "id"))
+      assert(starts.collect().map(_.getLong(0)).toSeq == Seq(2L))
       val in = load().filter("id IN (1, 3)").select("id")
+      wholeSnapshot(in, Set("id"))
       assert(in.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
-      // arithmetic predicate: not pushable — full snapshot ships, Spark filters
-      val arith = load().filter("id + 1 = 3")
-      assert(scanOf(arith).planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 3)
-      assert(arith.select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
+      val arith = load().filter("id + 1 = 3").select("id")
+      wholeSnapshot(arith, Set("id"))
+      assert(arith.collect().map(_.getLong(0)).toSeq == Seq(2L))
     }
   }
 
   test("filter pruning every row yields an empty result, not a crash") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
-        .filter("score > 1000.0")
-      assert(df.count() == 0)
+        .filter("score > 1000.0").select("name")
+      wholeSnapshot(df, Set("score", "name"))
+      assert(df.collect().isEmpty)
     }
   }
 
   test("IN over a type-widened column keeps rows (uncertainty never drops)") {
     // mixed number/string values widen the column to string at inference;
-    // the driver-side prune must not drop the numeric-typed JSON nodes
+    // decode must render the numeric-typed JSON nodes as their text
     val mixed = """[{"id":5},{"id":"7"},{"id":9}]"""
     StubServer.withServer({ case ("GET", "/m", _) => (200, mixed) }) { srv =>
       val df = spark.read.format("http").option("url", srv.url("/m")).load()
       assert(df.schema("id").dataType.typeName == "string")
-      val got = df.filter("id IN ('5', '7')").select("id")
-        .collect().map(_.getString(0)).sorted.toSeq
+      val in = df.filter("id IN ('5', '7')").select("id")
+      wholeSnapshot(in, Set("id"))
+      val got = in.collect().map(_.getString(0)).sorted.toSeq
       assert(got == Seq("5", "7"))
     }
   }
 
-  test("limit pushdown truncates the snapshot") {
+  test("limit runs in Spark above a full-snapshot scan") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
-        .limit(2)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b.scan.asInstanceOf[HttpScan]
-      }
-      scan.foreach(s => assert(s.planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum <= 2))
+        .select("id").limit(2)
+      wholeSnapshot(df, Set("id"))
       assert(df.count() == 2)
     }
   }
 
-  test("top-N pushdown ships only the n best rows; Spark re-sorts above the scan") {
+  test("top-N sorts in Spark above a full-snapshot scan") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       import org.apache.spark.sql.functions.col
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
-        .orderBy(col("score").desc).limit(2)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b.scan.asInstanceOf[HttpScan]
-      }.getOrElse(fail("no BatchScanExec in plan"))
-      assert(scan.planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 2,
-        "top-2 scan should hold exactly two snapshot rows")
+        .orderBy(col("score").desc).limit(2).select("name")
+      wholeSnapshot(df, Set("score", "name"))
       assert(df.collect().map(_.getAs[String]("name")).toSeq == Seq("ann", "cyd"))
     }
   }
@@ -205,15 +204,11 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
       import org.apache.spark.sql.functions.col
       def load() = spark.read.format("http").option("url", srv.url("/users")).load()
       val multi = load().orderBy(col("active").desc, col("score")).limit(2)
-      val multiScan = multi.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b.scan.asInstanceOf[HttpScan]
-      }.getOrElse(fail("no BatchScanExec in plan"))
-      assert(multiScan.planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 3,
-        "multi-key sort must not prune the snapshot")
+        .select("name")
+      wholeSnapshot(multi, Set("active", "score", "name"))
       assert(multi.collect().map(_.getAs[String]("name")).toSeq == Seq("cyd", "ann"))
-      // nested key: ordering semantics not guaranteed to match → declined
-      val nested = load().orderBy(col("address.city")).limit(1)
+      val nested = load().orderBy(col("address.city")).limit(1).select("name")
+      wholeSnapshot(nested, Set("address", "name"))
       assert(nested.collect().map(_.getAs[String]("name")).toSeq == Seq("bob"))
     }
   }
@@ -378,7 +373,7 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("fetch=executor applies pushed filters and pruning at executor decode") {
+  test("fetch=executor prunes columns at decode; Spark filters rows") {
     val hits = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     StubServer.withServer(pagedRoutes(3, hits)) { srv =>
       val df = spark.read.format("http")

@@ -125,4 +125,30 @@ class HttpFetcherSpec extends AnyFunSuite {
       assert(e.getMessage.contains("500"))
     }
   }
+
+  test("429 waits Retry-After seconds, capped at the request timeout") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    StubServer.withServer({
+      case ("GET", "/soon", _) =>
+        if (calls.incrementAndGet() == 1) (429, """{"err":"slow down"}""")
+        else (200, """[{"id":7}]""")
+      case ("GET", "/later", _) => (429, """{"err":"slow down"}""")
+    }, {
+      case (("GET", "/soon", _), 429) => Seq("Retry-After" -> "1")
+      case (("GET", "/later", _), 429) => Seq("Retry-After" -> "3600")
+    }) { s =>
+      def secs(f: => Any): Double = {
+        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+      }
+      // the header's 1 s replaces the 60 s backoff
+      val slowBackoff = new HttpFetcher(backoffMillis = 60000L)
+      val waited = secs(assert(slowBackoff.fetchRows(Source("soon", s.url("/soon"))).size == 1))
+      assert(calls.get() == 2 && waited >= 1.0 && waited < 30.0, s"waited $waited s")
+      // an hour-long Retry-After is capped at the 1 s timeout
+      val capped = new HttpFetcher(timeout = java.time.Duration.ofSeconds(1),
+        maxRetries = 1, backoffMillis = 60000L)
+      val cappedWait = secs(intercept[HttpError](capped.fetchRows(Source("later", s.url("/later")))))
+      assert(cappedWait >= 1.0 && cappedWait < 30.0, s"waited $cappedWait s")
+    }
+  }
 }

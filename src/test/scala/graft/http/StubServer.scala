@@ -8,9 +8,12 @@ import java.nio.charset.StandardCharsets
   * serves canned JSONPlaceholder-shaped payloads on an ephemeral port.
   *
   * Routes are (method, path) → (status, body); a handler can also inspect
-  * the query string for pagination tests.
+  * the query string for pagination tests. `headers` adds response headers
+  * given the request and the status its route chose.
   */
-final class StubServer(routes: PartialFunction[(String, String, String), (Int, String)]) {
+final class StubServer(routes: PartialFunction[(String, String, String), (Int, String)],
+                       headers: PartialFunction[((String, String, String), Int),
+                         Seq[(String, String)]] = PartialFunction.empty) {
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   server.createContext("/", (ex: HttpExchange) => {
     val key = (ex.getRequestMethod, ex.getRequestURI.getPath,
@@ -18,6 +21,8 @@ final class StubServer(routes: PartialFunction[(String, String, String), (Int, S
     val (status, body) =
       if (routes.isDefinedAt(key)) routes(key) else (404, """{"error":"not found"}""")
     val bytes = body.getBytes(StandardCharsets.UTF_8)
+    headers.applyOrElse((key, status), (_: ((String, String, String), Int)) => Nil)
+      .foreach { case (k, v) => ex.getResponseHeaders.add(k, v) }
     ex.sendResponseHeaders(status, if (bytes.isEmpty) -1 else bytes.length)
     if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
     ex.close()
@@ -31,9 +36,11 @@ final class StubServer(routes: PartialFunction[(String, String, String), (Int, S
 
 object StubServer {
   /** Run a block against a stub, always stopping it. */
-  def withServer[A](routes: PartialFunction[(String, String, String), (Int, String)])
+  def withServer[A](routes: PartialFunction[(String, String, String), (Int, String)],
+                    headers: PartialFunction[((String, String, String), Int),
+                      Seq[(String, String)]] = PartialFunction.empty)
                    (f: StubServer => A): A = {
-    val s = new StubServer(routes)
+    val s = new StubServer(routes, headers)
     try f(s) finally s.stop()
   }
 }

@@ -1,13 +1,17 @@
 package graft.http // for private[http] pageUrl access
 
-import graft.config.Pagination
-import org.scalacheck.{Gen, Prop, Properties}
+import graft.config.{Pagination, Source}
+import graft.connector.HttpTableProvider
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.scalacheck.{Arbitrary, Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
+import scala.jdk.CollectionConverters._
 
 /** SURVEY §5.4 property layer: however a row stream is split into pages,
   * the pagination loop reassembles exactly the original sequence (and
   * honors end_page truncation). One shared stub server; each case swaps
-  * the served pages. */
+  * the served pages. A `Source` also survives the trip through the
+  * `format("http")` reader options that `HttpTables` passes it as. */
 object PaginationProps extends Properties("Pagination") {
 
   @volatile private var pages: Vector[String] = Vector.empty
@@ -70,4 +74,25 @@ object PaginationProps extends Properties("Pagination") {
           u.count(_ == '&') == 1,
           !u.contains(' '))
     }
+
+  private val genParam: Gen[String] = Gen.oneOf(
+    Gen.oneOf("p age", "a&b", "x=y", "k = v & w", "page"), Arbitrary.arbitrary[String])
+  private val genPagination: Gen[Pagination] = for {
+    start <- Arbitrary.arbitrary[Int]
+    end <- Arbitrary.arbitrary[Int]
+    size <- Arbitrary.arbitrary[Int]
+    pageParam <- genParam
+    sizeParam <- genParam
+  } yield Pagination(start, end, size, pageParam, sizeParam)
+  private val genSource: Gen[Source] = for {
+    name <- Gen.identifier
+    url <- Gen.oneOf("http://h/x", "http://h/x?k=v&a=b", "https://h:8443/a b")
+    method <- Gen.oneOf("GET", "POST")
+    pagination <- Gen.option(genPagination)
+  } yield Source(name, url, method, pagination) // sql is not a reader option
+
+  property("reader options round-trip a Source") = forAll(genSource) { src =>
+    val opts = new CaseInsensitiveStringMap(HttpTableProvider.options(src).asJava)
+    HttpTableProvider.toSource(opts) == src
+  }
 }

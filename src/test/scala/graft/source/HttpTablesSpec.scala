@@ -60,7 +60,7 @@ class HttpTablesSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("snapshot semantics: one fetch at registration, decoded frame cached") {
+  test("snapshot semantics: one fetch at registration, nothing cached") {
     var hits = 0
     StubServer.withServer({
       case ("GET", "/c", _) => hits += 1; (200, """[{"x":1}]""")
@@ -69,9 +69,29 @@ class HttpTablesSpec extends AnyFunSuite with SparkSpec {
       df.count(); df.count()
       spark.sql("SELECT * FROM c").count()
       assert(hits == 1) // driver fetched exactly once
-      // ADVICE r2: hits==1 alone can't fail (rows are parallelized from
-      // driver memory) — assert the cache itself so re-decode is covered.
-      assert(df.storageLevel.useMemory, "decoded snapshot must be cached")
+      assert(!df.storageLevel.useMemory && !df.storageLevel.useDisk,
+        "registration must not cache the snapshot")
+    }
+  }
+
+  test("schema drift: a field first seen on page 2 is null on page 1") {
+    StubServer.withServer({
+      case ("GET", "/drift", q) => q.split("&")(0).stripPrefix("page=").toInt match {
+        case 1 => (200, """[{"id":1},{"id":2}]""")
+        case 2 => (200, """[{"id":3,"late":"x"}]""")
+        case _ => (200, "[]")
+      }
+    }) { s =>
+      val src = Source("drift", s.url("/drift"), pagination = Some(Pagination()))
+      val viaRegister = HttpTables.register(spark, src)
+      val viaFormat = spark.read.format("http")
+        .option("url", src.url).option("paginate", "true").load()
+      for (df <- Seq(viaRegister, viaFormat)) {
+        assert(df.schema.fieldNames.toSeq == Seq("id", "late"))
+        val rows = df.orderBy("id").collect()
+          .map(r => (r.getLong(0), Option(r.getString(1)))).toSeq
+        assert(rows == Seq((1L, None), (2L, None), (3L, Some("x"))))
+      }
     }
   }
 }

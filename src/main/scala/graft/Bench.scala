@@ -61,26 +61,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      // r15: AQE materializes independent query stages concurrently, so
-      // codegenStageId numbering varies run-to-run; with the id embedded
-      // in the generated class NAME (default), a re-run of the IDENTICAL
-      // query produces byte-different sources → codegen-cache miss → a
-      // Janino recompile inside the TIMED run with all other task threads
-      // parked on the compile KeyLock (thread-dump-verified; q_eval_chrf
-      // warm run: 6-12 recompiles ≈ +2-8 s). Constant class names make
-      // the cache key the structural source; entries are raised so
-      // shapes shared ACROSS queries survive the suite.
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
     // task spill accounting — local mode: all executors in this JVM
     val spillBytes = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
@@ -137,14 +118,8 @@ object Bench {
       spark.catalog.clearCache()
       t
     }
-    // dev knobs: SPARK_GRAFT_ONLY=q_a,q_b benches a named subset;
-    // SPARK_GRAFT_SMOKE=1 benches the deterministic ~1-in-8 smoke
-    // slice (mid-round iteration only — the full suite stays the
-    // gate; both knobs mark the JSON "subset")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .orElse(sys.env.get("SPARK_GRAFT_SMOKE").filter(_ == "1")
-        .map(_ => SparkEntry.smokeSet))
+    // dev subset (SparkEntry.only); a subset run marks the JSON "subset"
+    val only = SparkEntry.only
     only.foreach(_.diff(SparkEntry.queries.keySet).toSeq.sorted.foreach(n =>
       System.err.println(s"[bench] WARNING: SPARK_GRAFT_ONLY name not in SparkEntry.queries: $n")))
     val selected = only.fold(SparkEntry.queries)(names =>

@@ -31,14 +31,7 @@ object Main {
       sys.exit(2)
     }
     val cfg = YamlConfig.load(java.nio.file.Paths.get(args(0)))
-    val master = if (args.length > 1) args(1)
-      else s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"
-    val spark = SparkSession.builder()
-      .appName("graft")
-      .master(master)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft", master = args.lift(1))
     try run(spark, cfg).foreach { case (_, df) => df.show(20, truncate = true) }
     finally spark.stop()
   }

@@ -140,4 +140,13 @@ object SparkEntry {
     queries.keySet.filter(n =>
       n == "q1_pricing_summary" ||
         math.floorMod(scala.util.hashing.MurmurHash3.stringHash(n), 8) == 0)
+
+  /** The dev subset Bench and Verify run: `SPARK_GRAFT_ONLY=q_a,q_b`
+    * names queries, `SPARK_GRAFT_SMOKE=1` selects [[smokeSet]]; `None`
+    * (neither set) means the full registry. Mid-round iteration only —
+    * the full suite stays the gate, and both tools mark a subset run. */
+  def only: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+      .orElse(sys.env.get("SPARK_GRAFT_SMOKE").filter(_ == "1").map(_ => smokeSet))
 }

@@ -1,33 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      // deterministic codegen-cache keys across AQE stage-number jitter
-      // (see Bench.scala) — cuts warm-run Janino recompile storms
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // dev knob (same contract as Bench): dump a subset while iterating.
-    // Safe against env leakage into a driver run: a subset dump leaves
-    // the other queries' parquet dirs ABSENT, which any full compare
-    // reports as missing/failed — it cannot masquerade as full green.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .orElse(sys.env.get("SPARK_GRAFT_SMOKE").filter(_ == "1")
-        .map(_ => SparkEntry.smokeSet)) // mid-round smoke slice
+    // dev subset (SparkEntry.only, same contract as Bench). Safe against
+    // env leakage into a driver run: a subset dump leaves the other
+    // queries' parquet dirs ABSENT, which any full compare reports as
+    // missing/failed — it cannot masquerade as full green.
+    val only = SparkEntry.only
     only.foreach(names => System.err.println(
       s"[verify] SUBSET RUN — only ${names.mkString(",")}"))
     val selected = SparkEntry.queries.filter { case (name, _) =>

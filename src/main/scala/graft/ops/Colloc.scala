@@ -477,9 +477,7 @@ object Colloc {
 
   def textrankQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     val floor = textrankFloor(t(s, dir, "documents").count())
     val stops = Seq("the", "a", "of", "and", "to", "in")
     val tk = Text.withToks(s, dir, spread = true)

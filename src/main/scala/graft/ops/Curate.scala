@@ -675,9 +675,7 @@ object Curate {
     * Exactness: digests, counts, and basis points only. */
   def coverageQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     // split once per row as a named column: the previous inline form
     // re-evaluated split(lower(text)) INSIDE the chunk lambda, i.e.
     // once per chunk — Spark does not hoist loop-invariant

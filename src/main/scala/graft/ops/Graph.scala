@@ -41,9 +41,7 @@ object Graph {
     * instead of re-running the corpus joins. */
   private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     val custNation = t(s, dir, "customer")
       .join(t(s, dir, "nation"), $"c_nationkey" === $"n_nationkey")
       .select($"c_custkey", $"n_name".as("cn"))
@@ -1207,9 +1205,7 @@ object Graph {
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     val s = pairs.sparkSession
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     // canonical child → parent (child > parent) edges
     var state = pairs
       .select(greatest($"doc_a", $"doc_b").as("id"),
@@ -1905,9 +1901,7 @@ object Graph {
   def ccStar(pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
     val s = pairs.sparkSession
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     val nodes = pairs.select($"u".as("id")).union(pairs.select($"v".as("id")))
       .distinct().checkpoint()
     def checksum(e: DataFrame): (Long, Long) = {

@@ -1699,9 +1699,7 @@ object Stats {
   def conformalQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     // checkpointed: five consumers (model/cal/calN/q-hat/test) would
     // otherwise each rescan parquet and recompute the md5 fold — the
     // r10 sf1 bench measured that recompute amplification at 6 scans
@@ -3070,9 +3068,7 @@ object Stats {
   def pacfQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     val hourly = t(s, dir, "events")
       .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
       .agg(count(lit(1)).as("cnt"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utilities: smoke-run the flagship entry, explain/run any named
   * query from SparkEntry.queries, or sweep every plan for red flags.
   *
@@ -66,19 +64,7 @@ object Dev {
       "cume_dist/percent_rank/ntile semantics under test"))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.Tables.nanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      // deterministic codegen-cache keys across AQE stage-number jitter
-      // (see Bench.scala) — cuts warm-run Janino recompile storms
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+    val spark = graft.Session("graft-dev")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     args(0) match {
@@ -127,40 +113,15 @@ object Dev {
           java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
             .asScala.map(_.getCollectionTime).sum
         }
-        val stLines = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-        val stTask = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Int)]()
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-              val si = s.stageInfo
-              val wall = (for { a <- si.completionTime; b <- si.submissionTime } yield a - b).getOrElse(0L)
-              stLines.put(si.stageId, f"stage ${si.stageId}%3d wall=${wall / 1e3}%7.3f s tasks=${si.numTasks}%4d shufR=${si.taskMetrics.shuffleReadMetrics.totalBytesRead / 1e6}%8.1f MB shufW=${si.taskMetrics.shuffleWriteMetrics.bytesWritten / 1e6}%8.1f MB")
-            }
-            override def onTaskEnd(
-                t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              val m = t.taskMetrics
-              if (m != null) stTask.compute(t.stageId, (_, v) => {
-                val (tot, mx, n) = if (v == null) (0L, 0L, 0) else v
-                (tot + m.executorRunTime, math.max(mx, m.executorRunTime), n + 1)
-              })
-            }
-          })
+        val report = StageReport(spark)
         for (i <- 0 until iters) {
-          if (i == iters - 1) { stLines.clear(); stTask.clear() }
+          if (i == iters - 1) report.reset()
           val g0 = gcMs()
           val t0 = System.nanoTime()
           spark.sql(args(1)).write.format("noop").mode("overwrite").save()
           println(f"SQLTIME iter $i: ${(System.nanoTime() - t0) / 1e9}%.3f s gc=${(gcMs() - g0) / 1e3}%.2f s")
         }
-        Thread.sleep(500)
-        locally {
-          import scala.jdk.CollectionConverters._
-          stLines.asScala.toSeq.sortBy(_._1).foreach { case (id, line) =>
-            val (tot, mx, n) = stTask.getOrDefault(id, (0L, 0L, 0))
-            println(line + f"  taskSum=${tot / 1e3}%7.3f s taskMax=${mx / 1e3}%6.3f s n=$n%d")
-          }
-        }
+        report.print()
       case "dump" =>
         // single-query verify dump (same shape Verify.scala writes), so
         // one new query can be oracle-checked without a full sweep

@@ -1,89 +1,43 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only micro-timer: runs one registered query N times (default 3)
   * bench-style and prints, per iteration, the DataFrame CONSTRUCTION
   * time (driver-side fn(spark, dir) — includes any eager bounds /
   * spread-probe jobs an operator runs while building its frame) and the
-  * noop-save EXECUTION time separately, then a per-stage table of the
-  * LAST iteration (wall, task count, total task time, max task, shuffle
-  * bytes) to attribute a slow job to its stage. `graft.Bench.once`
-  * times construction + save together; `Prof` times save only — this
-  * tool attributes the difference. Not part of any gate. */
+  * noop-save EXECUTION time separately, then the [[StageReport]] of the
+  * LAST iteration (per job: wall and description; per stage: wall, task
+  * count, total and max task time, shuffle bytes) to attribute a slow
+  * query to its eager jobs and stages. `graft.Bench.once` times
+  * construction + save together — this tool attributes the difference.
+  * A/B a conf with `-Dspark.key=value` (see [[graft.Session]]).
+  * Not part of any gate.
+  *
+  * Usage: tools/run.sh graft.tools.TimeQ <name> [sfDir] [iters] */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.nanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("GRAFT_CODEGEN_ID", "false"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_MIN_PART", "1m"))
-      .config("spark.local.dir",
-        sys.env.getOrElse("GRAFT_LOCAL_DIR",
-          java.lang.System.getProperty("java.io.tmpdir")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-timeq")
     val fn = graft.SparkEntry.queries(name)
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val taskTime = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Int)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val i = s.stageInfo
-        val wall = (for { a <- i.completionTime; b <- i.submissionTime } yield a - b).getOrElse(0L)
-        // rddInfos scopes name the physical operators in the stage —
-        // AQE stage-job callsites are all the same generic lambda, so
-        // the RDD scope chain is the only stage→operator attribution
-        val ops = i.rddInfos.sortBy(_.id).flatMap(_.scope)
-          .map(_.name).distinct.mkString(">")
-        stages.put(i.stageId, f"stage ${i.stageId}%3d wall=${wall / 1e3}%7.3f s tasks=${i.numTasks}%4d shufR=${i.taskMetrics.shuffleReadMetrics.totalBytesRead / 1e6}%8.1f MB shufW=${i.taskMetrics.shuffleWriteMetrics.bytesWritten / 1e6}%8.1f MB  ${ops.take(140)}%s")
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskTime.compute(t.stageId, (_, v) => {
-            val (tot, mx, n) = if (v == null) (0L, 0L, 0) else v
-            (tot + m.executorRunTime, math.max(mx, m.executorRunTime), n + 1)
-          })
-        }
-      }
-    })
-    def compileStats(): (Long, Long) = {
-      val m = org.apache.spark.metrics.source.CodegenMetrics
-      (m.METRIC_COMPILATION_TIME.getCount,
-        m.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum)
-    }
+    val report = StageReport(spark)
+    def compileCount(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     var i = 0
     while (i < iters) {
-      if (i == iters - 1) { stages.clear(); taskTime.clear() }
-      val (c0, _) = compileStats()
+      if (i == iters - 1) report.reset()
+      val c0 = compileCount()
       val t0 = System.nanoTime()
       val df = fn(spark, dir)
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
-      val (c1, _) = compileStats()
       val jit = java.lang.management.ManagementFactory.getCompilationMXBean
         .getTotalCompilationTime
-      println(f"iter $i%d construct=${(t1 - t0) / 1e9}%.3f s  save=${(t2 - t1) / 1e9}%.3f s  total=${(t2 - t0) / 1e9}%.3f s  codegenCompiles=${c1 - c0}%d  jitTotal=${jit / 1e3}%.1f s")
+      println(f"iter $i%d construct=${(t1 - t0) / 1e9}%.3f s  save=${(t2 - t1) / 1e9}%.3f s  total=${(t2 - t0) / 1e9}%.3f s  codegenCompiles=${compileCount() - c0}%d  jitTotal=${jit / 1e3}%.1f s")
       i += 1
     }
-    Thread.sleep(600)
-    import scala.jdk.CollectionConverters._
-    stages.asScala.toSeq.sortBy(_._1).foreach { case (id, line) =>
-      val (tot, mx, n) = taskTime.getOrDefault(id, (0L, 0L, 0))
-      println(line + f"  taskSum=${tot / 1e3}%7.3f s taskMax=${mx / 1e3}%6.3f s n=$n%d")
-    }
+    report.print()
     spark.stop()
   }
 }

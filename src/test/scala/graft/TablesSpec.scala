@@ -154,4 +154,47 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
     assert(drift.isEmpty,
       s"TESTDATA VALUE DRIFT (regenerated fixture?):\n${drift.mkString("\n")}")
   }
+
+  /** A one-table fixture dir holding `x.parquet` with rows `0 until n`. */
+  private def writeX(dir: String, n: Int): Unit =
+    spark.range(n).toDF("v").write.mode("overwrite").parquet(s"$dir/x.parquet")
+
+  private def entriesFor(dir: String) =
+    Tables.handles.keySet.toArray.toSeq.collect { case k @ (_, d, _) if d == dir => k }
+
+  private def withDir(body: String => Unit): Unit = {
+    val dir = Files.createTempDirectory("graft-handles-").toString
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("a regenerated table replaces its handle entry rather than adding one") {
+    withDir { dir =>
+      writeX(dir, 3)
+      assert(Tables.t(spark, dir, "x").count() == 3)
+      assert(Tables.t(spark, dir, "x") eq Tables.t(spark, dir, "x"),
+        "an unchanged listing must reuse the handle")
+      writeX(dir, 5)
+      assert(Tables.t(spark, dir, "x").count() == 5, "regenerated files must give a fresh relation")
+      assert(entriesFor(dir).size == 1, s"entries for $dir: ${entriesFor(dir)}")
+    }
+  }
+
+  test("newSession() never receives another session's handle") {
+    withDir { dir =>
+      writeX(dir, 2)
+      val other = spark.newSession()
+      val a = Tables.t(spark, dir, "x")
+      val b = Tables.t(other, dir, "x")
+      assert(a ne b)
+      assert(b.sparkSession eq other)
+      assert(entriesFor(dir).size == 2)
+    }
+  }
+
+  test("the per-file stat of a vanished path yields the absent marker") {
+    val gone = Files.createTempFile("graft-vanished-", ".parquet")
+    Files.delete(gone)
+    assert(Tables.stat(gone) == s"$gone:absent")
+  }
 }
